@@ -9,15 +9,19 @@ import org.apache.spark.sql.SparkSession
   * set in code — not in ops docs that a deployment can miss.
   *
   * The one load-bearing conf: Spark plans the bounded top-k
-  * [[graft.operators.TopKAggregator]] as ObjectHashAggregate, which
+  * [[graft.operators.TopKAggregator]] (a native TypedImperativeAggregate
+  * over a packed-primitive buffer) as ObjectHashAggregate, which
   * silently switches to a *sort-based fallback* once a partition sees
   * more than `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
-  * distinct groups (default 128). With a Kryo-serialized buffer that
-  * fallback is catastrophic: every additional input row pays a
-  * serialize-sort path instead of an O(log k) heap insert (measured at
-  * sf0.1: 54 s → 14 s on 200-group exact ANN, 126 s → 5 s on LSH ANN,
-  * just from this conf). 128 groups is *tiny* — any real query set
-  * trips it.
+  * distinct groups (default 128). The fallback serializes every live
+  * buffer, then sorts and re-aggregates the remaining input rows one by
+  * one, so each row pays a sort instead of an O(log k) heap insert. A
+  * cheaper buffer format shrinks the constant but not that shape: the
+  * threshold measured 54 s → 14 s on 200-group exact ANN and
+  * 126 s → 5 s on LSH ANN at sf0.1 when the buffer was still Kryo, and
+  * the Kryo-buffered `Aggregator`s ([[graft.operators.TermTopKAggregator]],
+  * the Misra–Gries sketch) still pay that full price.
+  * 128 groups is *tiny* — any real query set trips it.
   *
   * Raising the threshold is safe for this engine's aggregations by
   * construction: the only ObjectHashAggregate in the hot path is the

@@ -13,12 +13,14 @@ import graft.functions.VectorFunctions
   * `Hadoop.java:66-71`, but through Catalyst): the *query* side is
   * broadcast, the *item* (train) side streams partition-parallel; the
   * cross product plans as BroadcastNestedLoopJoin; the per-query top-k is
-  * a bounded [[TopKAggregator]] with map-side partial aggregation, so the
-  * shuffle carries only `partitions × |queries| × k` rows. At 100 TB the
-  * item side never needs to be co-located or broadcast — only the query
-  * block does; for query sets too large to broadcast, split the query set
-  * into broadcastable blocks and union the results (block-nested variant,
-  * SURVEY §7.4).
+  * the native bounded [[TopKAggregator]] (ObjectHashAggregate) with a
+  * map-side partial pass, so the shuffle carries only
+  * `partitions × |queries| × k` packed rows. [[classify]] votes over each
+  * query's top-k array in the same stage as the final aggregate, so
+  * classification needs one exchange. At 100 TB the item side never needs to
+  * be co-located or broadcast — only the query block does; for query sets
+  * too large to broadcast, split the query set into broadcastable blocks
+  * and union the results (block-nested variant, SURVEY §7.4).
   */
 object Knn {
 
@@ -47,7 +49,23 @@ object Knn {
       queryVec: String = "query_vec",
       itemVec: String = "item_vec",
       itemLabel: Option[String] = None,
-      metric: String = "squaredEuclidean"): DataFrame = {
+      metric: String = "squaredEuclidean"): DataFrame =
+    ranked(neighbors(queries, items, k, queryId, itemId, queryVec, itemVec,
+      itemLabel, metric))
+
+  /** (q_id, nbrs): each query's k nearest items as one ascending
+    * `array<struct<dist,id,label>>` — the shared core of [[knnJoin]] and
+    * [[classify]]. */
+  private def neighbors(
+      queries: DataFrame,
+      items: DataFrame,
+      k: Int,
+      queryId: String,
+      itemId: String,
+      queryVec: String,
+      itemVec: String,
+      itemLabel: Option[String],
+      metric: String): DataFrame = {
 
     // the bounded top-k agg must never hit ObjectHashAggregate's
     // 128-group sort-based fallback (4-27x measured cliff); set the
@@ -69,15 +87,15 @@ object Knn {
       case m                  => throw new IllegalArgumentException(s"unknown metric: $m")
     }
 
-    val scored = it.crossJoin(broadcast(q)).select(
-      col("q_id"),
-      dist.as("dist"),
-      col("i_id"),
-      col("i_label"))
-
-    scored
+    it.crossJoin(broadcast(q))
+      .select(col("q_id"), dist.as("dist"), col("i_id"), col("i_label"))
       .groupBy(col("q_id"))
       .agg(TopK.topK(k)(col("dist"), col("i_id"), col("i_label")).as("nbrs"))
+  }
+
+  /** [[neighbors]]' arrays as one row per (query, rank). */
+  private def ranked(nbrs: DataFrame): DataFrame =
+    nbrs
       .select(col("q_id"), posexplode(col("nbrs")).as(Seq("pos", "n")))
       .select(
         col("q_id").as("query_id"),
@@ -85,7 +103,6 @@ object Knn {
         col("n.id").as("neighbor_id"),
         col("n.label").as("neighbor_label"),
         col("n.dist").as("dist"))
-  }
 
   /** Block-nested [[knnJoin]]: the 100 TB shape for query sets too large
     * to broadcast whole (SURVEY §7.4). The query set is split into
@@ -108,11 +125,26 @@ object Knn {
       queryVec: String = "query_vec",
       itemVec: String = "item_vec",
       itemLabel: Option[String] = None,
-      metric: String = "squaredEuclidean"): DataFrame = {
+      metric: String = "squaredEuclidean"): DataFrame =
+    ranked(blockedNeighbors(queries, items, k, blocks, queryId, itemId,
+      queryVec, itemVec, itemLabel, metric))
+
+  /** [[neighbors]] over `blocks` hash-disjoint query slices, unioned. */
+  private def blockedNeighbors(
+      queries: DataFrame,
+      items: DataFrame,
+      k: Int,
+      blocks: Int,
+      queryId: String,
+      itemId: String,
+      queryVec: String,
+      itemVec: String,
+      itemLabel: Option[String],
+      metric: String): DataFrame = {
     require(blocks >= 1, "blocks must be >= 1")
     (0 until blocks).map { b =>
       val slice = queries.filter(pmod(col(queryId).cast("long"), lit(blocks)) === b)
-      knnJoin(slice, items, k, queryId, itemId, queryVec, itemVec, itemLabel, metric)
+      neighbors(slice, items, k, queryId, itemId, queryVec, itemVec, itemLabel, metric)
     }.reduce(_ unionAll _)
   }
 
@@ -127,10 +159,18 @@ object Knn {
     * HashMap<int,int> iterates small non-negative keys in ascending
     * order, so first-strictly-greater keeps the smallest argmax).
     *
+    * Physical shape: broadcast nested-loop cross product → partial
+    * top-k → one exchange on the query id → final top-k, and the vote is
+    * a projection over each query's top-k array in that same final stage
+    * (tally each distinct label, take the greatest `(count, −label)`),
+    * not a regroup of exploded neighbors. A query with no neighbors
+    * (k = 0) gets no row.
+    *
     * @param blocks query-side blocking factor: 1 (default) broadcasts the
-    *               whole test set ([[knnJoin]]); > 1 routes through
-    *               [[knnJoinBlocked]] — the 100 TB shape when the query
-    *               set itself exceeds broadcast size. Results identical.
+    *               whole test set ([[knnJoin]]); > 1 splits it the way
+    *               [[knnJoinBlocked]] does — the 100 TB shape when the
+    *               query set itself exceeds broadcast size. Results
+    *               identical.
     * @return (test_id, prediction)
     */
   def classify(
@@ -147,51 +187,42 @@ object Knn {
 
     val nbrs =
       if (blocks <= 1)
-        knnJoin(
-          queries = test, items = train, k = k,
-          queryId = testId, itemId = trainId,
-          queryVec = testVec, itemVec = trainVec,
-          itemLabel = Some(labelCol))
+        neighbors(test, train, k, testId, trainId, testVec, trainVec,
+          Some(labelCol), "squaredEuclidean")
       else
-        knnJoinBlocked(
-          queries = test, items = train, k = k, blocks = blocks,
-          queryId = testId, itemId = trainId,
-          queryVec = testVec, itemVec = trainVec,
-          itemLabel = Some(labelCol))
+        blockedNeighbors(test, train, k, blocks, testId, trainId,
+          testVec, trainVec, Some(labelCol), "squaredEuclidean")
 
-    val votes = nbrs
-      .groupBy(col("query_id"), col("neighbor_label").as("label"))
-      .agg(count(lit(1)).as("cnt"))
-
-    val winner =
-      if (!legacyVote)
-        votes.groupBy(col("query_id"))
-          .agg(max_by(col("label"), struct(col("cnt"), -col("label"))).as("prediction"))
-      else {
+    val labels = transform(col("nbrs"), n => n.getField("label"))
+    val tallies = transform(array_distinct(labels), l => struct(
+      size(filter(labels, _ === l)).as("cnt"), (-l).as("neg_label"), l.as("label")))
+    val prediction =
+      if (!legacyVote) array_max(tallies).getField("label")
+      else
         // legacy: effective count = cnt − 1, strict > 0 to win → needs ≥ 2
         // occurrences; no winner → −1.
-        votes.groupBy(col("query_id"))
-          .agg(coalesce(
-            max_by(
-              when(col("cnt") >= 2, col("label")),
-              when(col("cnt") >= 2, struct(col("cnt"), -col("label")))),
-            lit(-1L)).as("prediction"))
-      }
+        coalesce(
+          array_max(filter(tallies, _.getField("cnt") >= 2)).getField("label"),
+          lit(-1L))
 
-    winner.select(col("query_id").as("test_id"), col("prediction"))
+    nbrs
+      .filter(size(col("nbrs")) > 0)
+      .select(col("q_id").as("test_id"), prediction.as("prediction"))
   }
 
   /** Reference-parity sink (SURVEY §2 #11): `testId\tprediction` lines
     * ascending by id, one file — the exact shape of the reference's
     * `predictions/part-r-00000` (TextOutputFormat, single reducer,
-    * Hadoop.java:270,300,308). `coalesce(1)` is deliberate single-file
-    * parity; drop it for a partitioned write at scale.
+    * Hadoop.java:270,300,308). One partition sorted locally writes the
+    * same bytes as a global sort, without the range-sampling job a
+    * global sort runs first; drop the single partition for a
+    * partitioned write at scale.
     */
   def writePredictions(predictions: DataFrame, path: String): Unit =
     predictions
-      .orderBy(col("test_id"))
+      .repartition(1)
+      .sortWithinPartitions(col("test_id"))
       .select(col("test_id").cast("string"), col("prediction").cast("string"))
-      .coalesce(1)
       .write.mode("overwrite").option("sep", "\t").csv(path)
 
   /** Fraction of predictions equal to the true label — the driver-side

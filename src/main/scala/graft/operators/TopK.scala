@@ -1,9 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.TernaryLike
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types._
 
 /** One scored candidate flowing into a per-group top-k aggregation.
   *
@@ -78,32 +85,140 @@ final class TopKBuffer(val k: Int) extends Serializable {
     this
   }
 
+  /** Heap slots in ascending (dist, id) order; dist compares as
+    * `java.lang.Double.compare` (a total order), like `sortBy` on a
+    * `(Double, Long)` key. */
+  def sortedSlots: Array[Int] =
+    Array.range(0, size).sortWith { (a, b) =>
+      val c = java.lang.Double.compare(dists(a), dists(b))
+      c < 0 || (c == 0 && ids(a) < ids(b))
+    }
+
   /** Ascending by (dist, id). */
   def sorted: Seq[Neighbor] =
-    (0 until size).map(i => Neighbor(dists(i), ids(i), labels(i)))
-      .sortBy(n => (n.dist, n.id))
+    sortedSlots.toSeq.map(i => Neighbor(dists(i), ids(i), labels(i)))
+
+  /** Packed primitives: `size`, then `size` (dist, id, label) triples in
+    * heap order, so [[TopKBuffer.fromBytes]] restores the heap as is. */
+  def toBytes: Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 + 24 * size)
+    bb.putInt(size)
+    var i = 0
+    while (i < size) { bb.putDouble(dists(i)).putLong(ids(i)).putLong(labels(i)); i += 1 }
+    bb.array()
+  }
 }
 
-/** Typed bounded top-k Aggregator; Spark plans it as a
-  * TypedImperativeAggregate → the buffer lives as a JVM object in the
-  * hash-agg map and serializes (Kryo) only across the shuffle.
+object TopKBuffer {
+  def fromBytes(k: Int, bytes: Array[Byte]): TopKBuffer = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val b = new TopKBuffer(k)
+    b.size = bb.getInt()
+    var i = 0
+    while (i < b.size) {
+      b.dists(i) = bb.getDouble(); b.ids(i) = bb.getLong(); b.labels(i) = bb.getLong(); i += 1
+    }
+    b
+  }
+}
+
+/** The bounded per-group top-k as a native Catalyst aggregate over a
+  * [[TopKBuffer]]: `(dist double, id bigint, label bigint)` in, the k
+  * smallest by (dist, id) out as `array<struct<dist,id,label>>` ascending.
+  *
+  * Spark plans it as ObjectHashAggregate: the buffer lives as a JVM
+  * object in the hash-agg map, each input row is three primitive reads
+  * and one heap insert, and the buffer crosses the shuffle as packed
+  * primitives ([[TopKBuffer.toBytes]]). Rows whose dist, id or label is
+  * null are skipped, as SQL aggregates skip nulls.
+  *
+  * With `distinctMin` the buffer holds k·`widen` entries and [[eval]]
+  * keeps each id's first (smallest) entry, then trims to k — see
+  * [[TopK.topKDistinctMin]].
   */
-class TopKAggregator(k: Int) extends Aggregator[Neighbor, TopKBuffer, Seq[Neighbor]] {
-  override def zero: TopKBuffer = new TopKBuffer(k)
-  override def reduce(b: TopKBuffer, n: Neighbor): TopKBuffer = { b.insert(n.dist, n.id, n.label); b }
-  override def merge(b1: TopKBuffer, b2: TopKBuffer): TopKBuffer = b1.mergeFrom(b2)
-  override def finish(b: TopKBuffer): Seq[Neighbor] = b.sorted
-  override def bufferEncoder: Encoder[TopKBuffer] = Encoders.kryo[TopKBuffer]
-  override def outputEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder[Seq[Neighbor]]()
+case class TopKAggregator(
+    dist: Expression,
+    id: Expression,
+    label: Expression,
+    k: Int,
+    widen: Int = 1,
+    distinctMin: Boolean = false,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[TopKBuffer]
+  with TernaryLike[Expression]
+  with ImplicitCastInputTypes {
+  require(k >= 0 && widen >= 1)
+
+  override def first: Expression = dist
+  override def second: Expression = id
+  override def third: Expression = label
+  override def prettyName: String = "topkaggregator"
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType, LongType)
+  override def dataType: DataType = TopKAggregator.OutputType
+  override def nullable: Boolean = true
+
+  @transient private lazy val input = UnsafeProjection.create(children)
+
+  override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k * widen)
+
+  override def update(b: TopKBuffer, row: InternalRow): TopKBuffer = {
+    val r = input(row)
+    if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+      b.insert(r.getDouble(0), r.getLong(1), r.getLong(2))
+    b
+  }
+
+  override def merge(b: TopKBuffer, other: TopKBuffer): TopKBuffer = b.mergeFrom(other)
+
+  override def eval(b: TopKBuffer): Any = {
+    val slots = b.sortedSlots
+    val kept =
+      if (!distinctMin) slots
+      else {
+        // ascending order: an id's first slot is its min-dist copy
+        val seen = scala.collection.mutable.HashSet.empty[Long]
+        slots.filter(i => seen.add(b.ids(i))).take(k)
+      }
+    new GenericArrayData(kept.map(i =>
+      InternalRow(b.dists(i), b.ids(i), b.labels(i)): Any))
+  }
+
+  override def serialize(b: TopKBuffer): Array[Byte] = b.toBytes
+  override def deserialize(bytes: Array[Byte]): TopKBuffer =
+    TopKBuffer.fromBytes(k * widen, bytes)
+
+  override def withNewMutableAggBufferOffset(o: Int): TopKAggregator =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): TopKAggregator =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      d: Expression, i: Expression, l: Expression): TopKAggregator =
+    copy(dist = d, id = i, label = l)
+}
+
+object TopKAggregator {
+  /** `array<struct<dist,id,label>>` exactly as `ExpressionEncoder[Seq[Neighbor]]`
+    * types it (fields non-null, elements nullable). */
+  val OutputType: DataType = ArrayType(StructType(Seq(
+    StructField("dist", DoubleType, nullable = false),
+    StructField("id", LongType, nullable = false),
+    StructField("label", LongType, nullable = false))), containsNull = true)
 }
 
 object TopK {
-  /** DataFrame-facing UDAF: `topK(k)(col(dist), col(id), col(label))` →
-    * `array<struct<dist,id,label>>` sorted ascending. Cast id/label to
-    * long and dist to double at the call site.
+  private def agg(k: Int, widen: Int, distinctMin: Boolean)(
+      dist: Column, id: Column, label: Column): Column =
+    Bridge.column(TopKAggregator(Bridge.expression(dist), Bridge.expression(id),
+      Bridge.expression(label), k, widen, distinctMin).toAggregateExpression())
+
+  /** Per-group bounded top-k: `topK(k)(col(dist), col(id), col(label))` →
+    * `array<struct<dist,id,label>>` sorted ascending by (dist, id).
+    * Inputs cast implicitly to double / bigint / bigint; rows with a null
+    * input are skipped.
     */
-  def topK(k: Int): UserDefinedFunction =
-    udaf(new TopKAggregator(k), Encoders.product[Neighbor])
+  def topK(k: Int): (Column, Column, Column) => Column =
+    agg(k, 1, distinctMin = false)
 
   /** Bounded top-k with per-id MIN-MERGE, in ONE aggregation: a
     * [[TopKBuffer]] widened to k·`widen` entries, deduped by id
@@ -121,8 +236,8 @@ object TopK {
     * the streaming IVFADC twin run the merge under a single windowed
     * aggregation.
     */
-  def topKDistinctMin(k: Int, widen: Int): UserDefinedFunction =
-    udaf(new TopKDistinctMinAggregator(k, widen), Encoders.product[Neighbor])
+  def topKDistinctMin(k: Int, widen: Int): (Column, Column, Column) => Column =
+    agg(k, widen, distinctMin = true)
 
   /** DataFrame-facing UDAF for per-group top-k TERMS:
     * `topTerms(k)(score, term, tf, df)` → `array<struct<score,term,tf,df>>`
@@ -133,30 +248,6 @@ object TopK {
     */
   def topTerms(k: Int): UserDefinedFunction =
     udaf(new TermTopKAggregator(k), Encoders.product[ScoredTerm])
-}
-
-/** [[TopK.topKDistinctMin]]'s Aggregator: accumulate into a widened
-  * [[TopKBuffer]] (capacity k·widen), dedup by id keeping the min
-  * dist and trim to k only at [[finish]]. */
-class TopKDistinctMinAggregator(k: Int, widen: Int)
-    extends Aggregator[Neighbor, TopKBuffer, Seq[Neighbor]] {
-  require(k >= 0 && widen >= 1)
-  override def zero: TopKBuffer = new TopKBuffer(k * widen)
-  override def reduce(b: TopKBuffer, n: Neighbor): TopKBuffer = {
-    b.insert(n.dist, n.id, n.label); b
-  }
-  override def merge(b1: TopKBuffer, b2: TopKBuffer): TopKBuffer =
-    b1.mergeFrom(b2)
-  override def finish(b: TopKBuffer): Seq[Neighbor] =
-    b.sorted
-      .groupBy(_.id).valuesIterator
-      .map(_.head) // sorted ascending (dist, id): head = the id's min
-      .toSeq
-      .sortBy(n => (n.dist, n.id))
-      .take(k)
-  override def bufferEncoder: Encoder[TopKBuffer] = Encoders.kryo[TopKBuffer]
-  override def outputEncoder: Encoder[Seq[Neighbor]] =
-    ExpressionEncoder[Seq[Neighbor]]()
 }
 
 /** One scored term flowing into a per-group top-k-terms aggregation.
@@ -241,9 +332,9 @@ final class TermTopKBuffer(val k: Int) extends Serializable {
       }
 }
 
-/** Typed bounded top-k-terms Aggregator (TypedImperativeAggregate: the
-  * buffer lives as a JVM object in the hash-agg map, Kryo across the
-  * shuffle — identical physical shape to [[TopKAggregator]]).
+/** Typed bounded top-k-terms Aggregator (Spark plans it as a
+  * TypedImperativeAggregate: the buffer lives as a JVM object in the
+  * hash-agg map and crosses the shuffle Kryo-serialized).
   */
 class TermTopKAggregator(k: Int)
     extends Aggregator[ScoredTerm, TermTopKBuffer, Seq[ScoredTerm]] {

@@ -1,5 +1,11 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import scala.util.Using
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -21,18 +27,27 @@ import org.apache.spark.sql.types._
   */
 object Arff {
 
-  /** Attribute names in header order (case-insensitive `@attribute`). */
+  /** Attribute names in header order (case-insensitive `@attribute`).
+    * Read on the driver from the header alone — the lines before
+    * `@data` — so the data section is never scanned for it.
+    */
   def attributes(spark: SparkSession, path: String): Seq[String] = {
-    val header = spark.sparkContext.textFile(path)
-      .filter(_.trim.toLowerCase.startsWith("@attribute"))
-      .collect()
-    header.map { l =>
-      // "@attribute <name> NUMERIC" — name may be quoted
-      val rest = l.trim.drop("@attribute".length).trim
-      val name = if (rest.startsWith("'")) rest.drop(1).takeWhile(_ != '\'')
-      else rest.takeWhile(!_.isWhitespace)
-      name
-    }.toSeq
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Using.resource(new BufferedReader(
+        new InputStreamReader(fs.open(p), StandardCharsets.UTF_8))) { in =>
+      Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .map(_.trim)
+        .takeWhile(!_.toLowerCase.startsWith("@data"))
+        .filter(_.toLowerCase.startsWith("@attribute"))
+        .map { l =>
+          // "@attribute <name> NUMERIC" — name may be quoted
+          val rest = l.drop("@attribute".length).trim
+          if (rest.startsWith("'")) rest.drop(1).takeWhile(_ != '\'')
+          else rest.takeWhile(!_.isWhitespace)
+        }
+        .toList
+    }
   }
 
   /** Read an all-numeric ARFF into a DataFrame with schema
@@ -43,7 +58,9 @@ object Arff {
     val n = attrs.size
     require(n > 0, s"no @attribute lines found in $path")
 
-    val rows = spark.sparkContext.textFile(path)
+    // one split per core: the file is the streamed side of the KNN cross
+    // join, so fewer splits than cores leaves cores idle in that stage
+    val rows = spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism)
       .map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("@") && !l.startsWith("%"))
       .zipWithIndex()
